@@ -71,14 +71,14 @@ def test_file_probed_exact_join_is_trace_identical(spark, tmp_path, bloom):
     assert sseen == oseen
 
 
-def test_lsm_frontier_mode_is_trace_identical(spark, tmp_path):
-    """frontier_mode='append' (LSM-style O(delta) frontier commits +
-    tombstone keys + read-time file-probed pending view) must equal the
-    oracle exactly — including across a mid-crawl frontier compaction
+def test_lsm_frontier_is_trace_identical(spark, tmp_path):
+    """The LSM frontier (O(delta) frontier commits + tombstone keys +
+    read-time file-probed pending view) must equal the oracle exactly —
+    including across mid-crawl frontier compactions
     (compact_frontier_every=2 inside a 5-round crawl)."""
     strace, sseen, _ = _spark_crawl(
         spark, tmp_path, 5,
-        frontier_mode="append", compact_frontier_every=2,
+        compact_frontier_every=2,
         use_bloom=True, bloom_min_keys=0,
     )
     otrace, oseen = _oracle_crawl(5)
@@ -86,25 +86,21 @@ def test_lsm_frontier_mode_is_trace_identical(spark, tmp_path):
     assert sseen == oseen
 
 
-@pytest.mark.parametrize("file_mode", [False, True])
-def test_incremental_bloom_maintenance_is_trace_identical(
-    spark, tmp_path, file_mode
-):
+def test_incremental_bloom_maintenance_is_trace_identical(spark, tmp_path):
     """Rounds 2+ maintain the bloom shards incrementally (manifest
-    file-diff delta OR-ed into the round-1 bitmaps) when capacity
+    file-diff delta OR-ed into the round-1 bitmap files) when capacity
     allows — forced here by bumping the state's capacity after round 1,
-    the mature-crawl shape where delta << seen.  Both distribution
-    forms; results must equal the oracle exactly."""
+    the mature-crawl shape where delta << seen.  Results must equal the
+    oracle exactly."""
     from topicalcrawler_spark.plans.round import (
         CrawlConfig, crawl_round, init_crawl, read_seen, read_trace,
     )
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(use_bloom=True, bloom_min_keys=0)
-    if file_mode:
-        kw["bloom_file_min_keys"] = 0
-    cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
+    cfg = CrawlConfig(
+        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
+    )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
     assert "bloom" in cfg._dims
@@ -140,8 +136,7 @@ def test_inprocess_retry_after_bloom_update_crash(spark, tmp_path, monkeypatch):
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
     cfg = CrawlConfig(
-        root=str(tmp_path / "crawl"),
-        use_bloom=True, bloom_min_keys=0, bloom_file_min_keys=0,
+        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
     )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -174,17 +169,6 @@ def test_inprocess_retry_after_bloom_update_crash(spark, tmp_path, monkeypatch):
     assert sseen == oseen
 
 
-def test_serial_verify_order_is_trace_identical(spark, tmp_path, monkeypatch):
-    """TC_OVERLAP_VERIFY=0 forces the metrics/verify action back to the
-    serial order (no second driver thread).  The overlap is pure
-    scheduling — both orders must produce byte-identical trace + seen."""
-    monkeypatch.setenv("TC_OVERLAP_VERIFY", "0")
-    strace, sseen, _ = _spark_crawl(spark, tmp_path, 2)
-    otrace, oseen = _oracle_crawl(2)
-    assert strace == otrace
-    assert sseen == oseen
-
-
 def test_five_rounds_with_bloom_prefilter(spark, tmp_path):
     """M2/M4 gate: 5 rounds, bloom prefilter ON — results must be
     IDENTICAL to the oracle (bloom is an optimization, never authority)."""
@@ -198,20 +182,13 @@ def test_five_rounds_with_bloom_prefilter(spark, tmp_path):
 
 def test_bloom_file_distribution_path_is_trace_identical(spark, tmp_path):
     """The SURVEY §4.2 design-point path: shard bitmaps as
-    partition-local parquet files probed in place (no driver
-    collect+broadcast).  Forced via bloom_file_min_keys=0 — the trace
-    and seen set must still be byte-identical to the oracle, and the
-    shard files must actually exist on disk."""
+    partition-local parquet files probed in place (never collected and
+    broadcast).  The trace and seen set must still be byte-identical to
+    the oracle, and the shard files must actually exist on disk."""
     import glob
-    import os
 
     strace, sseen, cfg = _spark_crawl(
-        spark,
-        tmp_path,
-        4,
-        use_bloom=True,
-        bloom_min_keys=0,
-        bloom_file_min_keys=0,
+        spark, tmp_path, 4, use_bloom=True, bloom_min_keys=0
     )
     otrace, oseen = _oracle_crawl(4)
     assert strace == otrace
@@ -224,8 +201,9 @@ def test_bloom_file_distribution_path_is_trace_identical(spark, tmp_path):
 
 def test_crawl_exhausts_frontier_and_stays_oracle_equal(spark, tmp_path):
     """Depth cap 1 + generous uniform budgets drain the frontier after
-    a few rounds; further rounds must be clean no-ops (n_pending == 0)
-    and the full trace + seen set still match the oracle exactly."""
+    a few rounds; further rounds must be clean no-ops (n_pending == 0:
+    every frontier row has a fetched tombstone) and the full trace +
+    seen set still match the oracle exactly."""
     strace, sseen, cfg = _spark_crawl(
         spark, tmp_path, 6, max_depth=1, budget_rows=[], default_budget=200
     )
@@ -237,10 +215,13 @@ def test_crawl_exhausts_frontier_and_stays_oracle_equal(spark, tmp_path):
     assert sseen == oseen
     from topicalcrawler_spark import icelite
 
-    n_left = icelite.read_manifest(
-        cfg.table("frontier"), icelite.latest_snapshot_id(cfg.table("frontier"))
-    )["row_count"]
-    assert n_left == 0
+    def n_rows(table):
+        return icelite.read_manifest(
+            cfg.table(table), icelite.latest_snapshot_id(cfg.table(table))
+        )["row_count"]
+
+    assert n_rows("frontier") > 0
+    assert n_rows("frontier") - n_rows("fetched") == 0
 
 
 def test_hot_host_skew_trace_parity_and_salt_spread(spark, tmp_path):
@@ -339,17 +320,16 @@ def test_crawl_delay_cap_trace_parity(spark, tmp_path):
     ], "cap engaged but the trace is identical to the uncapped crawl"
 
 
-@pytest.mark.parametrize("mode", ["replace", "append"])
-def test_resume_equivalence(spark, tmp_path, mode):
+def test_resume_equivalence(spark, tmp_path):
     """§3.3: crawl(k) ≡ crawl(j); resume(k−j) — byte-identical trace
     and seen-set.  The resume leg uses a FRESH CrawlConfig (cold
     restart, as a new spark-submit would have): all durable state must
-    live in icelite snapshots, none in the in-memory dim/bloom memos.
-    Parametrized over both frontier maintenance modes — the LSM mode's
-    tombstone table must survive a cold restart too."""
+    live in icelite snapshots, none in the in-memory dim/bloom memos —
+    the LSM frontier's tombstone table must survive a cold restart
+    too."""
     from topicalcrawler_spark.plans.round import resume
 
-    kw = {"frontier_mode": mode, "use_bloom": True, "bloom_min_keys": 0}
+    kw = {"use_bloom": True, "bloom_min_keys": 0}
     (tmp_path / "full").mkdir()
     full_trace, full_seen, _ = _spark_crawl(
         spark, tmp_path / "full", rounds=3, **kw
@@ -398,18 +378,9 @@ def test_seen_compaction_is_result_invariant(spark, tmp_path):
     assert all(os.path.exists(f) for f in files)
 
 
-@pytest.mark.parametrize(
-    "mode,crash_table",
-    [
-        ("append", "trace"),
-        ("append", "seen"),
-        ("append", "fetched"),
-        ("append", "frontier"),
-        ("replace", "seen"),
-    ],
-)
+@pytest.mark.parametrize("crash_table", ["trace", "seen", "fetched", "frontier"])
 def test_crash_mid_round_then_resume_matches_oracle(
-    spark, tmp_path, monkeypatch, mode, crash_table
+    spark, tmp_path, monkeypatch, crash_table
 ):
     """A round is several table commits, not one atomic operation.
     Crash immediately AFTER the named table's round-2 commit, then
@@ -424,7 +395,7 @@ def test_crash_mid_round_then_resume_matches_oracle(
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(frontier_mode=mode, use_bloom=True, bloom_min_keys=0)
+    kw = dict(use_bloom=True, bloom_min_keys=0)
     cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -483,7 +454,7 @@ def test_crash_mid_compaction_small_tombstones_then_resume(
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(frontier_mode="append", compact_frontier_every=4)
+    kw = dict(compact_frontier_every=4)
     cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
     init_crawl(spark, cfg, seeds_path)
     for r in (1, 2, 3):
@@ -550,10 +521,7 @@ def test_crash_mid_frontier_compaction_then_resume(spark, tmp_path, monkeypatch)
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(
-        frontier_mode="append", compact_frontier_every=2,
-        use_bloom=True, bloom_min_keys=0,
-    )
+    kw = dict(compact_frontier_every=2, use_bloom=True, bloom_min_keys=0)
     cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -699,8 +667,8 @@ def test_bloom_generations_swept_and_frontier_rerun_guarded(
     (a) stale bloom shard-file generations (crash debris, pre-restart
         dirs with no in-memory build record) leak — a full rebuild now
         sweeps every other round-* dir, and resume() clears the table;
-    (b) the replace-mode frontier commit was the only per-round commit
-        without a crash-re-run guard — a re-run must not stack a
+    (b) the frontier commit must carry the same crash-re-run guard as
+        every other per-round commit — a re-run must not stack a
         redundant same-round snapshot."""
     import glob as _glob
 
@@ -712,8 +680,7 @@ def test_bloom_generations_swept_and_frontier_rerun_guarded(
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
     cfg = CrawlConfig(
-        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0,
-        bloom_file_min_keys=0,
+        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
     )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -728,9 +695,9 @@ def test_bloom_generations_swept_and_frontier_rerun_guarded(
     bloom_dirs = _glob.glob(os.path.join(cfg.table("bloom"), "round-*"))
     assert len(bloom_dirs) == 1  # full rebuild swept ALL other gens
 
-    # (b) crash right after the frontier replace commit (lineage not
-    # yet committed), then re-run: the frontier snapshot id must not
-    # advance — the guard skips the redundant O(frontier) rewrite
+    # (b) crash right after the frontier commit (lineage not yet
+    # committed), then re-run: the frontier snapshot id must not
+    # advance — the guard skips the redundant commit
     real_commit = icelite.commit
 
     def crash_lineage(df, table_dir, round_n, *a, **kw):
@@ -877,11 +844,18 @@ def test_random_seed_list_all_hosts_trace_parity(spark, tmp_path):
         n_shards=4,
         use_bloom=True,
         bloom_min_keys=0,
-        frontier_mode="lsm",
         compact_frontier_every=2,
         compact_seen_every=2,
     )
     run_crawl(spark, cfg, seeds_path, 3)
+    # the trial must really have compacted the LSM frontier (round 2)
+    from topicalcrawler_spark import icelite
+
+    assert any(
+        m.get("meta", {}).get("compacted")
+        for m in icelite.history(cfg.table("frontier"))
+    )
+    assert icelite.latest_snapshot_id(cfg.table("fetched")) is not None
     strace = [
         tuple(r[c] for c in TRACE_COLS)
         for r in read_trace(spark, cfg).select(*TRACE_COLS).collect()

@@ -1,20 +1,19 @@
 """Design-point demonstration: the per-round cost model at the largest
-frontier this sandbox can hold, with ALL THREE dedup crossovers engaged
-by their REAL thresholds (not test-forced).
+frontier one machine can hold, with both dedup crossovers engaged by
+their REAL thresholds (not test-forced).
 
 Synthesizes a mature crawl state — a multi-M-row pending frontier and a
-seen table past ``seen_join_file_min_keys``/``bloom_file_min_keys``
-(50M keys) — directly as icelite snapshots, then runs consecutive
+seen table past ``seen_join_file_min_keys`` (50M keys) — directly as icelite snapshots, then runs consecutive
 crawl_rounds with the DEFAULT CrawlConfig thresholds and records every
 phase wall.  The claim under test (BASELINE.md "Design-point cost
 model"): at steady state no per-round phase grows O(table) — round r+1
 phase walls stay flat while the seen/frontier tables grow by Δ each
 round, because
-  - the bloom prefilter is file-distributed (>= 50M keys) and
-    maintained incrementally (O(Δ) after the round-1 build),
+  - the bloom prefilter is file-distributed and maintained
+    incrementally (O(Δ) after the round-1 build),
   - the exact seen anti-join is file-probed (never shuffles the seen
     side),
-  - the frontier is in LSM append mode (O(Δ) commits + tombstones).
+  - the frontier is an LSM table (O(Δ) commits + tombstones).
 
 Usage: python tools/designpoint_run.py [n_seen] [n_frontier] [rounds]
                                        [bloom_capacity_factor]
@@ -91,16 +90,14 @@ def main() -> None:
             root=os.path.join(root, "crawl"),
             n_shards=32,
             use_bloom=True,            # real thresholds — nothing forced:
-            # bloom_min_keys=50k, bloom_file_min_keys=50M,
-            # seen_join_file_min_keys=50M all trip at n_seen=60M
-            frontier_mode="append",
+            # bloom_min_keys=50k and seen_join_file_min_keys=50M
+            # both trip at n_seen=60M
             default_budget=400,
             budget_rows=[],
             max_depth=8,
             bloom_capacity_factor=bloom_factor,
         )
         assert n_seen >= cfg.seen_join_file_min_keys
-        assert n_seen >= cfg.bloom_file_min_keys
 
         # --- synthesize the mature crawl state as round-0 snapshots ---
         t_synth = time.monotonic()
@@ -242,11 +239,8 @@ def main() -> None:
             "rounds": rounds,
             "crossovers": {
                 "bloom_engaged": n_seen >= cfg.bloom_min_keys,
-                "bloom_mode": bloom_state.get("mode"),
-                "bloom_file_threshold": cfg.bloom_file_min_keys,
                 "seen_join_file_threshold": cfg.seen_join_file_min_keys,
                 "seen_join_file_engaged": n_seen >= cfg.seen_join_file_min_keys,
-                "frontier_mode": cfg.frontier_mode,
             },
             "bloom_capacity_factor": bloom_factor,
             "maintenance_events": events,
@@ -255,8 +249,8 @@ def main() -> None:
             "cpu_steal_core_s": round((steal_ticks() - s0) / 100, 1),
             "per_round": per_round,
         }
-        assert bloom_state.get("mode") == "file", (
-            "bloom file distribution did not engage at its real threshold"
+        assert bloom_state.get("dir"), (
+            "bloom prefilter did not engage at its real threshold"
         )
         print(json.dumps(out))
     finally:

@@ -6,12 +6,19 @@ silently drop URLs the reference fetches).  Architecture:
 
   phase 1 (optional, scale): bloom-shard prefilter inside an
            Arrow-batch UDF — drops ~(1-fpp) of already-seen candidates
-           before any shuffle;
+           before any shuffle.  The shard bitmaps live as
+           partition-local parquet files, built
+           (``write_bloom_shard_files``) and maintained
+           (``update_bloom_shard_files``) executor-side and probed in
+           place (``bloom_prefilter_files``): no bitmap is ever
+           collected into one JVM;
   phase 2 (authority): exact left_anti join against the seen table on
            (url_hash, url_canon) — hash first so the join keys compare
            cheaply, canonical string second so a 64-bit collision can
            never merge two distinct URLs (at 10^10 keys the birthday
-           bound makes pure-hash joins wrong).
+           bound makes pure-hash joins wrong).  Spark's own join
+           (``anti_join_seen``) below the crawl's size crossover, the
+           file-probed join (``anti_join_seen_files``) past it.
 """
 
 from __future__ import annotations
@@ -35,7 +42,7 @@ def shard_ids(keys: np.ndarray, n_shards: int) -> np.ndarray:
     — so one partition overlaps only ~1-2 shards, which is what lets
     the builder keep just a couple of partial bitmaps per task.
     n_shards must be a power of two — asserted HERE (not only in
-    build_bloom_shards) so a probe-side caller with a mismatched
+    the bitmap build) so a probe-side caller with a mismatched
     n_shards fails fast instead of silently truncating log2 (and
     n_shards=1 never reaches an undefined 64-bit numpy shift)."""
     assert n_shards > 0 and n_shards & (n_shards - 1) == 0, "power of two"
@@ -86,17 +93,18 @@ def anti_join_seen_files(
     side probed IN PLACE from its own icelite data files instead of
     shuffled.
 
-    Why: ``links LEFT ANTI seen`` cannot broadcast the right side (the
-    seen set is the big one), so past broadcast size Spark plans a
-    sort-merge join that SHUFFLES the full 10^10-row seen table every
-    round — the single largest per-round data movement at the design
-    point.  But the seen table's files are url_hash-range-clustered
-    (every commit goes through repartitionByRange, compaction preserves
-    it) and the manifest records per-file url_hash [min,max]
-    (icelite commit footer stats — the Iceberg manifest-stats
-    analogue).  So each probe task can read ONLY the seen files
-    overlapping its batch's url_hash range and anti-merge locally:
-    the seen side is read once, never shuffled, never sorted.
+    Why: ``links LEFT ANTI seen`` broadcasts the seen side only while
+    it fits under ``spark.sql.autoBroadcastJoinThreshold``; past that
+    Spark plans a sort-merge join that SHUFFLES the full seen table
+    every round — the single largest per-round data movement at the
+    10^10-row design point.  But the seen table's files are
+    url_hash-range-clustered (every commit goes through
+    repartitionByRange, compaction preserves it) and the manifest
+    records per-file url_hash [min,max] (icelite commit footer stats —
+    the Iceberg manifest-stats analogue).  So each probe task can read
+    ONLY the seen files overlapping its batch's url_hash range and
+    anti-merge locally: the seen side is read once, never shuffled,
+    never sorted.
 
     ``file_index``: [(path, min_hash, max_hash)] from the manifest —
     O(n_files) metadata, broadcast with the closure.  Callers should
@@ -184,12 +192,11 @@ def anti_join_seen_files(
 
 
 def _probe_batches(batches, get_shard, n_shards: int, k: int):
-    """Shared probe kernel: annotate each Arrow batch with maybe_seen.
-    ``get_shard(sid) -> uint8 bitmap | None`` supplies bitmaps —
-    a broadcast list lookup on the small-set path, a lazy per-shard
-    file read on the distributed path (None = shard has no keys, so
-    nothing in it can be seen).  Kept injectable so tests can count
-    exactly which shards a partition pulls."""
+    """Probe kernel: annotate each Arrow batch with maybe_seen.
+    ``get_shard(sid) -> uint8 bitmap | None`` supplies bitmaps — a
+    lazy per-shard file read in ``bloom_prefilter_files`` (None =
+    shard has no keys, so nothing in it can be seen).  Kept injectable
+    so tests can count exactly which shards a partition pulls."""
     for pdf in batches:
         keys = pdf["url_hash"].to_numpy(dtype=np.int64)
         sids = shard_ids(keys, n_shards)
@@ -203,46 +210,17 @@ def _probe_batches(batches, get_shard, n_shards: int, k: int):
         yield pdf.assign(maybe_seen=pd.Series(hit, index=pdf.index))
 
 
-def bloom_prefilter(
-    links: DataFrame, shard_bits: list[bytes], n_shards: int, k: int
-) -> DataFrame:
-    """J1 phase 1 — probe broadcast bloom shards; keep rows the filter
-    says are unseen, plus route possible-hits onward (the exact join
-    then decides).  Returns links annotated with ``maybe_seen``.
-
-    Shards are keyed by the top url_hash bits (``shard_ids``) — aligned
-    with the url_hash range partitioning of the seen table, so a probe
-    task touches ~1-2 shard bitmaps.
-    """
-    from pyspark.sql import types as T
-
-    sc = links.sparkSession.sparkContext
-    b_shards = sc.broadcast([np.frombuffer(b, dtype=np.uint8) for b in shard_bits])
-
-    # never .add() onto df.schema — it mutates the DataFrame's cached schema
-    out_schema = T.StructType(
-        list(links.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
-    )
-
-    def probe_iter(batches):
-        shards = b_shards.value
-        yield from _probe_batches(
-            batches, lambda sid: shards[sid], n_shards, k
-        )
-
-    return links.mapInPandas(probe_iter, schema=out_schema)
-
-
 def bloom_prefilter_files(
     links: DataFrame, shard_dir: str, n_shards: int, k: int
 ) -> DataFrame:
-    """J1 phase 1, distributed-bitmap form (SURVEY §4.2 crossover) —
-    same contract as ``bloom_prefilter`` but the bitmaps live as
-    partition-local parquet files (``write_bloom_shard_files``), NEVER
-    transiting the driver: each probe task lazily reads ONLY the shards
-    its url_hash range touches (shard = top url_hash bits = the seen
-    table's range-partitioning key, so that is 1-2 files per task),
-    caching them for the task's remaining batches.  At the 10^10-key
+    """J1 phase 1 — annotate links with ``maybe_seen`` from the bloom
+    shard bitmaps; the exact join then decides the possible hits.  The
+    bitmaps live as partition-local parquet files
+    (``write_bloom_shard_files``), NEVER collected into one JVM: each
+    probe task lazily reads ONLY the shards its url_hash range touches
+    (shard = top url_hash bits = the seen table's range-partitioning
+    key, so that is 1-2 files per task), caching them for the task's
+    remaining batches.  At the 10^10-key
     design point this replaces a multi-GB driver collect+broadcast with
     O(bitmap × shards-touched) per executor read from shared storage
     (on a cluster, ``shard_dir`` is an HDFS/S3 path).  A shard with no
@@ -284,10 +262,16 @@ def _merged_shard_bitmaps(
     total: int | None,
     params: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, int, int]:
-    """The shared scale-safe BUILD: streamed per-partition partial
-    bitmaps OR-merged per shard.  Returns (merged_df(shard_id, bits),
-    n_bits, k) — the two distribution paths below differ only in where
-    the merged bitmaps go (driver broadcast vs partition-local files).
+    """The scale-safe BUILD: streamed per-partition partial bitmaps
+    OR-merged per shard.  Returns (merged_df(shard_id, bits), n_bits,
+    k), shared by the full build (``write_bloom_shard_files``) and the
+    incremental update (``update_bloom_shard_files``).  Per-task memory
+    is O(bitmap), never O(keys) — a grouped-map build that pulls every
+    url_hash of a shard into ONE pandas group would hold ~5 GB of keys
+    per task at the 10^10-key design point — and the OR-merge is
+    commutative (property-tested).  All shards share one (n_bits, k)
+    sizing derived from the expected per-shard load so probe code stays
+    branch-free.
 
     ``params``: fixed (n_bits, k) — the incremental-maintenance path
     passes the params of the bitmaps it is OR-ing into (delta partials
@@ -349,7 +333,7 @@ def write_bloom_shard_files(
     fpp: float = 0.01,
     total: int | None = None,
 ) -> tuple[int, int]:
-    """A5, distributed form (SURVEY §4.2) — the merged shard bitmaps
+    """A5 (SURVEY §4.2) — per-shard bloom bitmaps; the merged ones
     are written straight from their merge tasks as parquet files
     partitioned by shard_id (``out_dir/shard_id=N/``), so NO bitmap
     ever transits the driver; ``bloom_prefilter_files`` probes them in
@@ -364,36 +348,6 @@ def write_bloom_shard_files(
     return k, n_bits
 
 
-def update_bloom_shards(
-    seen_delta: DataFrame,
-    prior: list[bytes],
-    n_shards: int,
-    n_bits: int,
-    k: int,
-) -> list[bytes]:
-    """A5, incremental broadcast form: OR the DELTA keys into existing
-    shard bitmaps at the bitmaps' own (n_bits, k).
-
-    Bloom bitmaps are OR-monotone and the seen table is append-only,
-    so build(all keys) == build(old keys) | build(new keys) at equal
-    params — the per-round build cost drops from O(seen) to O(delta).
-    Callers own the capacity rule (rebuild via ``build_bloom_shards``
-    when the key count outgrows the sizing; fpp degradation can only
-    ever cost performance, never correctness — the exact join is the
-    authority)."""
-    merged, _, _ = _merged_shard_bitmaps(
-        seen_delta, n_shards, fpp=0.0, total=None, params=(n_bits, k)
-    )
-    out = [np.frombuffer(b, dtype=np.uint8).copy() for b in prior]
-    for r in merged.collect():
-        np.bitwise_or(
-            out[r["shard_id"]],
-            np.frombuffer(r["bits"], dtype=np.uint8),
-            out=out[r["shard_id"]],
-        )
-    return [b.tobytes() for b in out]
-
-
 def update_bloom_shard_files(
     seen_delta: DataFrame,
     prev_dir: str,
@@ -402,11 +356,20 @@ def update_bloom_shard_files(
     n_bits: int,
     k: int,
 ) -> None:
-    """A5, incremental distributed form: re-merge ONLY the shards the
-    delta touches (previous bitmap files for those shards unioned with
-    the delta's partials, executor-side — the same OR-monotonicity
-    argument as ``update_bloom_shards``); untouched shards are carried
-    forward as hardlinks, an O(1)-metadata op per shard.  Per-round
+    """A5, incremental form: OR the DELTA keys into existing shard
+    bitmaps at the bitmaps' own (n_bits, k).  Bloom bitmaps are
+    OR-monotone and the seen table is append-only, so build(all keys)
+    == build(old keys) | build(new keys) at equal params — the
+    per-round build cost drops from O(seen) to O(delta).  Callers own
+    the capacity rule (full rebuild via ``write_bloom_shard_files``
+    when the key count outgrows the sizing; fpp degradation can only
+    ever cost performance, never correctness — the exact join is the
+    authority).
+
+    Only the shards the delta touches are re-merged (previous bitmap
+    files for those shards unioned with the delta's partials,
+    executor-side); untouched shards are carried forward as
+    hardlinks, an O(1)-metadata op per shard.  Per-round
     I/O is therefore O(touched-shard bitmap bytes), not O(total
     bitmap bytes) — at the multi-GB design-point bitmap set, a delta
     landing in 2 of 4096 shards rewrites 2 bitmaps, not 4096.
@@ -468,30 +431,3 @@ def update_bloom_shard_files(
                 _os.link(f, target)
             except OSError:
                 _shutil.copy2(f, target)
-
-
-def build_bloom_shards(
-    seen: DataFrame, n_shards: int, fpp: float = 0.01, total: int | None = None
-) -> tuple[list[bytes], int]:
-    """A5, broadcast form — per-shard bloom bitmaps; returns
-    (bitmaps, k).  The small-seen-set fast path: one collect of
-    n_shards merged bitmaps for broadcast.  Past
-    ``CrawlConfig.bloom_file_min_keys`` the crawl switches to
-    ``write_bloom_shard_files`` + ``bloom_prefilter_files`` so the
-    (by then multi-GB) bitmap set never moves through one JVM.
-
-    Round-1's grouped-map build pulled every url_hash of a shard into
-    ONE pandas group (~5 GB of keys per task at the 10^10-key design
-    point) and was replaced by the streamed-partials + OR-merge
-    pipeline (``_merged_shard_bitmaps``): per-task memory is O(bitmap),
-    never O(keys), and the OR-merge is commutative (property-tested).
-
-    All shards share one (n_bits, k) sizing derived from the expected
-    per-shard load so probe code stays branch-free. Pass ``total``
-    (e.g. an icelite manifest row_count) to skip the sizing count job.
-    n_shards must be a power of two (top-bits shard function).
-    """
-    merged, n_bits, k = _merged_shard_bitmaps(seen, n_shards, fpp, total)
-    rows = {r["shard_id"]: r["bits"] for r in merged.collect()}
-    empty = bloom.build(np.array([], dtype=np.int64), n_bits, k).tobytes()
-    return [rows.get(i, empty) for i in range(n_shards)], k

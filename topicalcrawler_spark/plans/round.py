@@ -1,9 +1,9 @@
 """The crawl loop — §3.1 lifecycle: one round = one DataFrame job chain.
 
-Per round, over icelite snapshot tables (frontier / seen / corpus /
-trace / lineage):
+Per round, over icelite snapshot tables (frontier / fetched / seen /
+corpus / trace / lineage):
 
-  1. read frontier snapshot (pending URLs)
+  1. read the pending view: frontier minus fetched tombstones
   2. J2/P5 robots gate (broadcast join + codegen'd longest-prefix)
   3. J3/W1/P6 per-host budget top-k (salted two-stage window)
   4. U3 fetch (Arrow-batch synthetic web)
@@ -12,8 +12,9 @@ trace / lineage):
   7. links: explode + canon (U1) + score (U2) + scheme/depth filter
      + T1 deterministic batch dedup + (optional bloom prefilter) +
      J1 exact anti-join vs seen
-  8. commit: seen += new links, frontier = residual ∪ new links,
-     lineage += per-partition metrics
+  8. commit: seen += new links, fetched += this round's consumed rows,
+     frontier += new links (LSM, periodically compacted), lineage +=
+     per-partition metrics
 
 Determinism contract (SURVEY.md §7 hard part 1): ordering key =
 (relevance_q desc, depth, discovery_time, discovery_seq) — all
@@ -35,6 +36,7 @@ wall-clock).
 
 from __future__ import annotations
 
+import glob
 import os
 import secrets
 import shutil
@@ -58,12 +60,9 @@ from ..functions import (
 from ..operators.dedup import (
     anti_join_seen,
     anti_join_seen_files,
-    bloom_prefilter,
     bloom_prefilter_files,
-    build_bloom_shards,
     dedup_batch,
     update_bloom_shard_files,
-    update_bloom_shards,
     write_bloom_shard_files,
 )
 from ..operators.fetch import fetch_selected
@@ -93,27 +92,23 @@ class CrawlConfig:
     salt: int = 8
     use_bloom: bool = False
     bloom_fpp: float = 0.01
-    # bloom crossover: below this seen-set size the prefilter's two
-    # extra python jobs cost more than the exact anti-join they would
-    # save — skip them (the anti-join is always the authority, so this
-    # never changes results; trace tests pin that by forcing
-    # bloom_min_keys=0).  At the 10^10 design point the filter always
-    # engages.
+    # bloom crossover: below this seen-set size the prefilter's extra
+    # python jobs cost more than the exact anti-join they would save —
+    # skip them (the anti-join is always the authority, so this never
+    # changes results; trace tests pin that by forcing
+    # bloom_min_keys=0).  Once engaged, the merged shard bitmaps are
+    # written as partition-local parquet files
+    # (write_bloom_shard_files) and probed in place
+    # (bloom_prefilter_files, 1-2 shard reads per task): they are never
+    # collected and broadcast, which at the 10^10 design point would
+    # move multi-GB of bitmap through one JVM.
     bloom_min_keys: int = 50_000
-    # second crossover (SURVEY §4.2): past this seen-set size the
-    # merged shard bitmaps are multi-GB in aggregate — they are written
-    # as partition-local parquet files (write_bloom_shard_files) and
-    # probed in place (bloom_prefilter_files, 1-2 shard reads per
-    # task), instead of collect+broadcast through the driver.  50M keys
-    # at fpp=0.01 is ~60 MB of bitmap — the last size where a driver
-    # round-trip is still harmless; at the 10^10 design point the file
-    # path always engages.  Results identical either way (trace test
-    # pins it by forcing bloom_file_min_keys=0).
-    bloom_file_min_keys: int = 50_000_000
-    # third crossover: past this seen-set size the EXACT anti-join's
-    # sort-merge shuffle of the full seen table (the single largest
-    # per-round data movement at 10^10 keys — left-anti cannot
-    # broadcast its right side) is replaced by the file-probed join
+    # exact-join crossover: below spark.sql.autoBroadcastJoinThreshold
+    # the seen snapshot is broadcast (BroadcastHashJoin LeftAnti
+    # BuildRight); past it Spark plans a sort-merge join that SHUFFLES
+    # the full seen table every round — at 10^10 keys the single
+    # largest per-round data movement.  Past this seen-set size the
+    # join is replaced by the file-probed join
     # (operators.dedup.anti_join_seen_files): links are range-
     # partitioned by url_hash and each task reads ONLY the seen files
     # overlapping its range, via the manifest's commit-time per-file
@@ -144,19 +139,16 @@ class CrawlConfig:
     # size, and an append-only table accumulating O(rounds) files per
     # hash range would erode that bound (round-3 ADVICE).
     compact_seen_every: int = 0
-    # frontier maintenance mode.  "replace" (default): each round
-    # commits the full residual ∪ new-links frontier — simple, but an
-    # O(frontier) rewrite per round, which at the 10^10-row design
-    # point dwarfs the actual per-round delta (new links + budget).
-    # "append" (LSM-style): the frontier table is append-only (new
-    # links per round) plus a fetched/blocked tombstone-keys table;
-    # the pending set is resolved at read time by the same zero-shuffle
+    # LSM frontier: the frontier table is append-only (new links per
+    # round) plus a "fetched" tombstone-keys table (rows fetched or
+    # robots-blocked); the pending set — frontier minus tombstones
+    # (_pending) — is resolved at read time by the same zero-shuffle
     # file-probed anti-join the seen set uses, and every
     # ``compact_frontier_every`` rounds the materialized pending set
-    # replace-commits both tables — so per-round write cost is
-    # O(delta), amortized O(frontier / K) for maintenance.  Results
-    # identical (trace test pins it, including through a compaction).
-    frontier_mode: str = "replace"
+    # replace-commits both tables.  Per-round write cost is O(delta),
+    # amortized O(frontier / K) for maintenance, instead of an
+    # O(frontier) rewrite per round.  Results identical (trace test
+    # pins it, including through a compaction).
     compact_frontier_every: int = 8
     # robots crawl-delay enforcement: when > 0, each host's effective
     # per-round budget is additionally capped at
@@ -328,6 +320,32 @@ def _snap_as_of(table_dir: str, round_max: int) -> int | None:
     return None
 
 
+def _pending(
+    spark: SparkSession,
+    cfg: CrawlConfig,
+    frontier_snap: int | None,
+    tomb_snap: int | None,
+) -> DataFrame:
+    """The LSM frontier's pending set: frontier rows MINUS the fetched
+    tombstones (``tomb_snap=None``: no tombstones), via the zero-shuffle
+    file-probed anti-join — both tables are url_hash-range-clustered,
+    so manifest stats prune file reads.  When the tombstone manifest
+    lacks file stats (a foreign table) the broadcast anti-join stands
+    in: tombstone removal is never skipped, since a skipped removal
+    resurrects already-fetched rows."""
+    frontier = icelite.read_snapshot(spark, cfg.table("frontier"), frontier_snap)
+    if tomb_snap is None:
+        return frontier
+    tomb_index = icelite.file_hash_index(cfg.table("fetched"), tomb_snap)
+    if tomb_index is not None:
+        return anti_join_seen_files(frontier, tomb_index)
+    return frontier.join(
+        icelite.read_snapshot(spark, cfg.table("fetched"), tomb_snap),
+        ["url_hash", "url_canon"],
+        "left_anti",
+    )
+
+
 def crawl_round(spark: SparkSession, cfg: CrawlConfig, round_n: int) -> dict:
     """Execute one crawl round; returns the round's metric counters.
 
@@ -374,11 +392,7 @@ def _crawl_round_impl(
     )
     n_frontier_rows = frontier_manifest["row_count"]
     fetched_tbl = cfg.table("fetched")
-    tomb_snap_id = (
-        _snap_as_of(fetched_tbl, round_n - 1)
-        if cfg.frontier_mode == "append"
-        else None
-    )
+    tomb_snap_id = _snap_as_of(fetched_tbl, round_n - 1)
     tomb_manifest = (
         icelite.read_manifest(fetched_tbl, tomb_snap_id) if tomb_snap_id else None
     )
@@ -419,20 +433,9 @@ def _crawl_round_impl(
     n_pending = n_frontier_rows - n_tomb
     if n_pending <= 0:
         return {"round": round_n, "n_pending": 0, "n_fetched": 0}
-    frontier = icelite.read_snapshot(spark, cfg.table("frontier"), frontier_snap_id)
-    if tomb_snap_id and n_tomb > 0:
-        # LSM read path: pending = append-files MINUS tombstones, via
-        # the zero-shuffle file-probed anti-join (both tables are
-        # url_hash-range-clustered; manifest stats prune file reads)
-        tomb_index = icelite.file_hash_index(fetched_tbl, tomb_snap_id)
-        if tomb_index is not None:
-            frontier = anti_join_seen_files(frontier, tomb_index)
-        else:  # stats missing (foreign table) — broadcast-anti fallback
-            frontier = frontier.join(
-                icelite.read_snapshot(spark, fetched_tbl, tomb_snap_id),
-                ["url_hash", "url_canon"],
-                "left_anti",
-            )
+    frontier = _pending(
+        spark, cfg, frontier_snap_id, tomb_snap_id if n_tomb > 0 else None
+    )
 
     # 2. robots gate (J2/J7/P5 — all JVM-side); the robots dim
     # (as-of-resolved) is memoized across rounds.  The gate METRICS are
@@ -540,15 +543,8 @@ def _crawl_round_impl(
         .crossJoin(verify_agg)
         .crossJoin(gate_agg)
     )
-    # TC_OVERLAP_VERIFY=0 forces the serial order (A/B + diagnosis
-    # escape hatch); default: overlap.
-    overlap = os.environ.get("TC_OVERLAP_VERIFY", "1") != "0"
     with ThreadPoolExecutor(max_workers=1) as pool:
-        if overlap:
-            metrics_fut = pool.submit(metrics_df.first)
-        else:
-            fr = metrics_df.first()
-            mark("fetch_verify")
+        metrics_fut = pool.submit(metrics_df.first)
 
         trace_caches: list = []
         try:
@@ -589,9 +585,8 @@ def _crawl_round_impl(
                 c.unpersist()
         mark("trace")
 
-        if overlap:
-            fr = metrics_fut.result()
-            mark("fetch_verify")
+        fr = metrics_fut.result()
+        mark("fetch_verify")
     n_fetched, n_errors = int(fr["n"]), int(fr["n_err"] or 0)
     n_images = int(fr["n_img"] or 0)
     n_verify_failed = int(fr["n_bad"] or 0)
@@ -712,88 +707,49 @@ def _crawl_round_impl(
         # all of seen (the last remaining O(seen) scan per round).
         # Full rebuild when the key count outgrows the 1.5× sizing
         # headroom (fpp would degrade past design — a perf matter
-        # only, the exact join stays the authority), when the file
-        # set is not a superset of the build's (compaction), or when
-        # the distribution mode crosses over.
+        # only, the exact join stays the authority) or when the file
+        # set is not a superset of the build's (compaction).
         bst = cfg._dims.get("bloom")
         cur_files = frozenset(seen_manifest["files"])
-        want_mode = "file" if n_seen >= cfg.bloom_file_min_keys else "bcast"
-        fresh_ok = (
+        # a fresh bitmap generation dir, unique per attempt (same
+        # contract as icelite.next_data_dir): an in-process retry of a
+        # crashed round re-ORs its delta into a FRESH dir —
+        # OR-idempotent, and never out_dir == prev_dir (which
+        # update_bloom_shard_files rejects)
+        gen_dir = os.path.join(
+            cfg.table("bloom"), f"round-{round_n:06d}-{secrets.token_hex(4)}"
+        )
+        if (
             bst is not None
-            and bst["mode"] == want_mode
             and n_seen <= bst["capacity"]
             and bst["files"] <= cur_files
-        )
-        delta_files = sorted(cur_files - bst["files"]) if fresh_ok else []
-        if want_mode == "file":
-            if fresh_ok:
-                k = bst["k"]
-                if delta_files:
-                    # unique per attempt (same contract as
-                    # icelite.next_data_dir): an in-process retry of a
-                    # crashed round re-ORs its delta into a FRESH dir —
-                    # OR-idempotent, and never out_dir == prev_dir
-                    # (which update_bloom_shard_files rejects)
-                    shard_dir = os.path.join(
-                        cfg.table("bloom"),
-                        f"round-{round_n:06d}-{secrets.token_hex(4)}",
-                    )
-                    update_bloom_shard_files(
-                        spark.read.parquet(*delta_files).select("url_hash"),
-                        bst["dir"], shard_dir, cfg.n_shards,
-                        bst["n_bits"], k,
-                    )
-                    shutil.rmtree(bst["dir"], ignore_errors=True)
-                    bst["dir"] = shard_dir
-                else:
-                    shard_dir = bst["dir"]
-            else:
-                shard_dir = os.path.join(
-                    cfg.table("bloom"),
-                    f"round-{round_n:06d}-{secrets.token_hex(4)}",
+        ):
+            delta_files = sorted(cur_files - bst["files"])
+            if delta_files:
+                update_bloom_shard_files(
+                    spark.read.parquet(*delta_files).select("url_hash"),
+                    bst["dir"], gen_dir, cfg.n_shards, bst["n_bits"], bst["k"],
                 )
-                k, n_bits = write_bloom_shard_files(
-                    seen, shard_dir, cfg.n_shards, cfg.bloom_fpp,
-                    total=n_seen,
-                )
-                # sweep EVERY other generation, not just the in-memory
-                # bst pointer: crash debris and pre-restart dirs have
-                # no bst record but are equally superseded by this
-                # full rebuild (multi-GB each at the design point)
-                import glob as _glob
-
-                for d in _glob.glob(
-                    os.path.join(cfg.table("bloom"), "round-*")
-                ):
-                    if os.path.normpath(d) != os.path.normpath(shard_dir):
-                        shutil.rmtree(d, ignore_errors=True)
-                bst = {
-                    "mode": "file", "dir": shard_dir, "k": k,
-                    "n_bits": n_bits,
-                    "capacity": int(n_seen * cfg.bloom_capacity_factor),
-                }
-            probe = bloom_prefilter_files(links, shard_dir, cfg.n_shards, k)
+                shutil.rmtree(bst["dir"], ignore_errors=True)
+                bst["dir"] = gen_dir
         else:
-            if fresh_ok:
-                k = bst["k"]
-                if delta_files:
-                    bst["bits"] = update_bloom_shards(
-                        spark.read.parquet(*delta_files).select("url_hash"),
-                        bst["bits"], cfg.n_shards, bst["n_bits"], k,
-                    )
-                shard_bits = bst["bits"]
-            else:
-                shard_bits, k = build_bloom_shards(
-                    seen, cfg.n_shards, cfg.bloom_fpp, total=n_seen
-                )
-                bst = {
-                    "mode": "bcast", "bits": shard_bits, "k": k,
-                    "n_bits": len(shard_bits[0]) * 8,
-                    "capacity": int(n_seen * cfg.bloom_capacity_factor),
-                }
-            probe = bloom_prefilter(links, shard_bits, cfg.n_shards, k)
+            k, n_bits = write_bloom_shard_files(
+                seen, gen_dir, cfg.n_shards, cfg.bloom_fpp, total=n_seen
+            )
+            # sweep EVERY other generation, not just the in-memory bst
+            # pointer: crash debris and pre-restart dirs have no bst
+            # record but are equally superseded by this full rebuild
+            # (multi-GB each at the design point)
+            for d in glob.glob(os.path.join(cfg.table("bloom"), "round-*")):
+                if os.path.normpath(d) != os.path.normpath(gen_dir):
+                    shutil.rmtree(d, ignore_errors=True)
+            bst = {
+                "dir": gen_dir, "k": k, "n_bits": n_bits,
+                "capacity": int(n_seen * cfg.bloom_capacity_factor),
+            }
         bst["files"] = cur_files
         cfg._dims["bloom"] = bst
+        probe = bloom_prefilter_files(links, bst["dir"], cfg.n_shards, bst["k"])
         # cache the probe output: both branches below read it, so the
         # Arrow probe pass runs once, not once per branch
         probed = probe.cache()
@@ -826,7 +782,7 @@ def _crawl_round_impl(
     new_links = new_links.repartitionByRange(cfg.n_shards, "url_hash").cache()
     caches.append(new_links)
 
-    # 8. commits: seen += new, frontier = residual ∪ new
+    # 8. commits: seen += new, fetched += consumed, frontier += new
     # (n_new comes free from the append-commit's manifest delta; each
     # append is guarded by _round_committed so a crash re-run never
     # double-appends)
@@ -870,89 +826,56 @@ def _crawl_round_impl(
         # reads there (_snap_as_of)
         icelite.expire_snapshots(cfg.table("seen"), keep_last=3)
     mark("seen")
-    if cfg.frontier_mode == "append":
-        # LSM write path: O(delta) commits — tombstones for the rows
-        # this round consumed (fetched + robots-blocked, matching the
-        # replace-mode residual which keeps only allowed-minus-selected)
-        # and an append of the new links.  No O(frontier) rewrite.
-        tombs = (
-            gated.filter(~F.col("robots_allowed"))
-            .select("url_canon", "url_hash")
-            .unionByName(selected.select("url_canon", "url_hash"))
-            .repartitionByRange(cfg.n_shards, "url_hash")
+    # LSM write path: O(delta) commits — tombstones for the rows this
+    # round consumed (fetched + robots-blocked; the rows left pending
+    # are the allowed-but-unselected ones) and an append of the new
+    # links.  No O(frontier) rewrite.
+    tombs = (
+        gated.filter(~F.col("robots_allowed"))
+        .select("url_canon", "url_hash")
+        .unionByName(selected.select("url_canon", "url_hash"))
+        .repartitionByRange(cfg.n_shards, "url_hash")
+    )
+    if not _round_committed(fetched_tbl, round_n):
+        icelite.commit(tombs, fetched_tbl, round_n, mode="append")
+    if not _round_committed(cfg.table("frontier"), round_n):
+        frontier_snap = icelite.commit(
+            new_links.select(*[f.name for f in FRONTIER.fields]),
+            cfg.table("frontier"),
+            round_n,
+            mode="append",
         )
-        if not _round_committed(fetched_tbl, round_n):
-            icelite.commit(tombs, fetched_tbl, round_n, mode="append")
-        if not _round_committed(cfg.table("frontier"), round_n):
-            frontier_snap = icelite.commit(
-                new_links.select(*[f.name for f in FRONTIER.fields]),
-                cfg.table("frontier"),
-                round_n,
-                mode="append",
-            )
-        else:
-            frontier_snap = icelite.latest_snapshot_id(cfg.table("frontier"))
-        if (
-            cfg.compact_frontier_every
-            and round_n % cfg.compact_frontier_every == 0
-            and not _compaction_done(cfg.table("frontier"), round_n)
-        ):
-            # materialize the pending view and restart both chains —
-            # amortized O(frontier / K); result-invariant (trace test)
-            pend = icelite.read_snapshot(spark, cfg.table("frontier"))
-            t_idx = icelite.file_hash_index(fetched_tbl)
-            if t_idx is not None:
-                pend = anti_join_seen_files(pend, t_idx)
-            else:  # stats unavailable — broadcast-anti fallback, never
-                # skip tombstone removal (a skipped removal resurrects
-                # already-fetched rows into the compacted frontier)
-                pend = pend.join(
-                    icelite.read_snapshot(spark, fetched_tbl),
-                    ["url_hash", "url_canon"],
-                    "left_anti",
-                )
-            frontier_snap = icelite.commit(
-                pend.repartitionByRange(cfg.n_shards, "url_hash"),
-                cfg.table("frontier"),
-                round_n,
-                meta={"compacted": True},
-                mode="replace",
-            )
-            icelite.commit(
-                spark.createDataFrame(
-                    [], "url_canon string, url_hash long"
-                ).repartition(1),
-                fetched_tbl,
-                round_n,
-                mode="replace",
-            )
-            # keep_last=3: see the seen-table expiry note (crash
-            # re-runs pin reads to the r-1 snapshots)
-            icelite.expire_snapshots(cfg.table("frontier"), keep_last=3)
-            icelite.expire_snapshots(fetched_tbl, keep_last=3)
     else:
-        residual = allowed.join(
-            selected.select("url_canon"), "url_canon", "left_anti"
-        ).select(*[f.name for f in FRONTIER.fields])
-        new_frontier = residual.unionByName(new_links).repartitionByRange(
-            cfg.n_shards, "url_hash"
+        frontier_snap = icelite.latest_snapshot_id(cfg.table("frontier"))
+    if (
+        cfg.compact_frontier_every
+        and round_n % cfg.compact_frontier_every == 0
+        and not _compaction_done(cfg.table("frontier"), round_n)
+    ):
+        # materialize the pending view and restart both chains —
+        # amortized O(frontier / K); result-invariant (trace test)
+        pend = _pending(
+            spark, cfg, frontier_snap, icelite.latest_snapshot_id(fetched_tbl)
         )
-        # same crash-re-run guard as every other per-round commit: the
-        # content would be identical (pinned reads), but an unguarded
-        # re-run wastes an O(frontier) rewrite and stacks a redundant
-        # same-round snapshot whose superseded files replace mode never
-        # expires
-        if not _round_committed(cfg.table("frontier"), round_n):
-            frontier_snap = icelite.commit(
-                new_frontier, cfg.table("frontier"), round_n, mode="replace"
-            )
-            # replace mode rewrites the whole frontier each round, so
-            # without expiry storage grows O(rounds x frontier);
-            # keep_last=3 preserves the r-1 snapshot crash re-runs pin
-            # (same policy as the seen table and the LSM branch)
-            icelite.expire_snapshots(cfg.table("frontier"), keep_last=3)
-        else:
-            frontier_snap = icelite.latest_snapshot_id(cfg.table("frontier"))
+        frontier_snap = icelite.commit(
+            pend.repartitionByRange(cfg.n_shards, "url_hash"),
+            cfg.table("frontier"),
+            round_n,
+            meta={"compacted": True},
+            mode="replace",
+        )
+        icelite.commit(
+            spark.createDataFrame(
+                [], "url_canon string, url_hash long"
+            ).repartition(1),
+            fetched_tbl,
+            round_n,
+            mode="replace",
+        )
+        # keep_last=3: see the seen-table expiry note (crash re-runs
+        # pin reads to the r-1 snapshots)
+        icelite.expire_snapshots(cfg.table("frontier"), keep_last=3)
+        icelite.expire_snapshots(fetched_tbl, keep_last=3)
     mark("frontier")
 
     # lineage: per-partition fetch metrics + a round-total row (S7)
@@ -1020,9 +943,7 @@ def resume(spark: SparkSession, cfg: CrawlConfig, rounds: int) -> list[dict]:
     # re-run after its frontier commit means the round is never
     # revisited, so its scratch would otherwise leak a full round of
     # image bytes
-    import glob as _glob
-
-    for d in _glob.glob(os.path.join(cfg.root, "_refetch-*")):
+    for d in glob.glob(os.path.join(cfg.root, "_refetch-*")):
         shutil.rmtree(d, ignore_errors=True)
     # reclaim orphan manifests from commits that crashed between the
     # manifest claim and the pointer advance — they are invisible to
